@@ -1,10 +1,12 @@
 """T1 — kNN core operators (SURVEY.md §2.T1), the reference's own surface.
 
 Parity map (reference repo class, SURVEY.md §3.1 — checkout empty, §0):
-- ``Mapper.setup`` loading the test set from DistributedCache →
-  ``F.broadcast(queries)`` on the probe side of the pair join.
-- ``Mapper.map`` distance loop / CUDA tiled kernel → ``with_distance``
-  (Catalyst ``zip_with``/``aggregate`` expressions, functions/vector.py).
+- ``Mapper.setup`` loading the test set from DistributedCache → the
+  broadcast query side (``all_pairs``; the GEMM kernel's query block).
+- ``Mapper.map`` distance loop / CUDA tiled kernel → the GEMM kernel
+  (``plans/gemm_knn.py``) behind both kNN memos; ``with_distance``
+  (Catalyst ``zip_with``/``aggregate``, functions/vector.py — the same
+  distances bit for bit) for the pair-space keys and as the memos' twin.
 - ``Combiner``/``Reducer`` bounded top-k + majority vote →
   ``topk`` (window ``row_number``; Spark ≥3.5 pushes a partial
   WindowGroupLimit before the shuffle — the Combiner, for free) and
@@ -12,10 +14,8 @@ Parity map (reference repo class, SURVEY.md §3.1 — checkout empty, §0):
 
 Scale design (SURVEY.md §4): the probe/query side is broadcast (never
 shuffled); the train side streams partition-local; top-k is pruned
-map-side by WindowGroupLimit before the exchange. The cross product is
-never materialized to disk — it exists only inside the join stage. For
-bulk kNN at 100 TB the GEMM path in ``plans/gemm_knn.py`` replaces the
-expression evaluation with blockwise NumPy (CuPy drop-in for GPU).
+map-side before the exchange. The cross product is never materialized
+— it exists only inside the join stage or the kernel's tiles.
 
 Oracle conventions (SURVEY.md §7.2): round(4) every float, tie-break every
 window on a unique id, cast arrays to double, alias both sides alike.
@@ -28,6 +28,7 @@ from pyspark.sql.functions import col, lit
 
 from .. import tables
 from ..functions.vector import METRICS, l2_norm
+from ..plans.gemm_knn import knn_candidates_gemm
 
 K_DEFAULT = 10
 K_JOIN = 5
@@ -97,29 +98,69 @@ def majority_vote(topk_df: DataFrame) -> DataFrame:
     )
 
 
-_TEST_TOPK_MEMO = tables.SessionMemo()
+_KNN_MEMO = tables.SessionMemo()
+
+
+def _memo(spark: SparkSession, key: tuple, build) -> DataFrame:
+    hit = _KNN_MEMO.get(spark, key)
+    if hit is None:
+        hit = build()
+        _KNN_MEMO.put(spark, key, hit)
+    return hit
+
+
+def _self_knn(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """Memoized exact self-kNN of every point (its k nearest others on
+    (dist, tid), labels joined back): the ONE kernel pass both kNN memos
+    filter; the n·k-row result is checkpointed, never the pair space.
+    The kernel excludes NULL (poisoned) vectors; their pairs come back as
+    NULL-dist candidates before the window, so a NULL query keeps its
+    smallest-tid candidates and a NULL train vector ranks after every
+    finite one, as on the expression path (README corrupt-data contract
+    1–2). Both restore joins broadcast the NULL ids, empty on clean data."""
+
+    def build():
+        e = tables.embeddings(spark, sf_dir)
+        q = e.select(col("vec_id").alias("qid"), col("emb").alias("qemb"))
+        t = e.select(col("vec_id").alias("tid"), col("emb").alias("temb"))
+        nulls = e.filter(col("emb").isNull())
+        null_q = F.broadcast(nulls.select(col("vec_id").alias("qid")))
+        null_t = F.broadcast(nulls.select(col("vec_id").alias("tid")))
+        null_pairs = (
+            null_q.join(t.select("tid"), col("qid") != col("tid"))
+            .unionByName(
+                q.filter(col("qemb").isNotNull())
+                .select("qid")
+                .join(null_t, col("qid") != col("tid"))
+            )
+            .select("qid", "tid", lit(None).cast("double").alias("dist"))
+        )
+        cand = knn_candidates_gemm(q, t, k).unionByName(null_pairs)
+        lbl = e.select("vec_id", "label")
+        return (
+            topk(cand, k)
+            .join(lbl.select(col("vec_id").alias("qid"), col("label").alias("qlabel")), "qid")
+            .join(lbl.select(col("vec_id").alias("tid"), col("label").alias("tlabel")), "tid")
+            .select("qid", "tid", "rnk", "dist", "qlabel", "tlabel")
+            .localCheckpoint(eager=True)
+        )
+
+    return _memo(spark, (sf_dir.rstrip("/"), "self_knn", k), build)
 
 
 def knn_test_topk(spark: SparkSession, sf_dir: str, k: int = K_DEFAULT) -> DataFrame:
-    """Memoized exact test-split top-k — the evaluation ground truth.
-
-    r11 (same materialized-artifact pattern as knn_self_join): SEVENTEEN
-    graded keys across knn.py / analytics.py / udf.py consume
-    ``topk(_pairs(spark, sf_dir), k)`` over the %5 test split — the
-    classify/accuracy/confusion family, regress, predict_proba, AUC/
-    recall/precision/NDCG evaluation keys, the IVF-recall ground truth —
-    and each re-ran the O(|test|·|train|·d) pair fold per reference
-    (~1.5 s each at sf0.1; ml_ivf_recall_at10 referenced it twice in one
-    plan). The n_test·k-row ranked result is what gets checkpointed,
-    never the pair space. Keyed on (sf_dir, k);
-    ``tables.invalidate_caches(sf_dir)`` drops it."""
-    memo_key = (sf_dir.rstrip("/"), "test_topk", k)
-    hit = _TEST_TOPK_MEMO.get(spark, memo_key)
-    if hit is not None:
-        return hit
-    out = topk(_pairs(spark, sf_dir), k).localCheckpoint(eager=True)
-    _TEST_TOPK_MEMO.put(spark, memo_key, out)
-    return out
+    """Memoized exact test-split top-k, the evaluation ground truth of
+    seventeen graded keys: ``topk(_pairs(spark, sf_dir), k)`` — the
+    ``vec_id % 5 == 0`` queries against every other point, i.e. the
+    self-kNN pass filtered to them. Columns: qid, tid, rnk, dist
+    (unrounded), qlabel, tlabel."""
+    return _memo(
+        spark,
+        (sf_dir.rstrip("/"), "test_topk", k),
+        lambda: _self_knn(spark, sf_dir, max(k, K_DEFAULT)).filter(
+            (col("qid") % 5 == 0) & (col("rnk") <= k)
+        ),
+    )
 
 
 def classify(spark: SparkSession, sf_dir: str, k: int = K_DEFAULT) -> DataFrame:
@@ -181,59 +222,21 @@ def k_sweep_accuracy(spark: SparkSession, sf_dir: str, ks: list[int] | None = No
     )
 
 
-_SELF_JOIN_MEMO = tables.SessionMemo()
-
-
 def knn_self_join(spark: SparkSession, sf_dir: str, k: int = K_JOIN) -> DataFrame:
-    """kNN self-join: every point gets its k nearest (SURVEY.md [P:Zhang12]).
-
-    Memoized per (session, fixture dir, k) as an eagerly checkpointed
-    edge list: a dozen graph/ML operators consume the same kNN graph —
-    several referencing it two or three times inside one plan
-    (reciprocity, HITS, edge-length stats) — so the O(n²·d) pair fold
-    runs once per session instead of once per reference. This is the
-    materialized-graph-index pattern (build once, share); the n·k-row
-    result is what gets checkpointed, never the pair space.
-    ``tables.invalidate_caches(sf_dir)`` drops it with the other
-    per-directory memos when a scratch dir is rewritten in-session."""
-    memo_key = (sf_dir.rstrip("/"), "knn_self_join", k)
-    hit = _SELF_JOIN_MEMO.get(spark, memo_key)
-    if hit is not None:
-        return hit
-    e = tables.embeddings(spark, sf_dir)
-    q = e.select(col("vec_id").alias("qid"), col("emb").alias("qemb"))
-    t = e.select(col("vec_id").alias("tid"), col("emb").alias("temb"))
-    # r12 (guide §2.3, scripts/selfjoin_half_ab_r12.py): d(q,t) = d(t,q)
-    # bit-identically ((x-y)² vs (y-x)², same zip_with order, same left
-    # fold), so fold only qid < tid pairs — half the O(n²·d) build —
-    # and mirror each scored pair inline with explode(array(fwd, rev))
-    # ABOVE the fold, below the top-k window: the window receives the
-    # identical (qid, tid, dist) multiset, tie-break (dist, tid)
-    # unchanged. Edges asserted identical in the A/B (2.07 → 1.35 s).
-    # Unlike the ml_dbscan attempt (negative result, same script
-    # family), the mirror here feeds a WindowGroupLimit that prunes to
-    # k per qid immediately — no union-doubled partition count flows
-    # into downstream joins.
-    fanout = spark.sparkContext.defaultParallelism
-    half = (
-        t.repartition(fanout, col("tid"))
-        .join(F.broadcast(q), col("qid") < col("tid"))
-        .withColumn("dist", METRICS["euclidean"]("qemb", "temb"))
+    """kNN self-join: every point's k nearest as (qid, tid, rnk, dist
+    rounded to 4) (SURVEY.md [P:Zhang12]) — the kNN graph a dozen
+    graph/ML operators consume, a memoized filter over the self-kNN pass
+    (no kernel run of its own after ``knn_test_topk``)."""
+    return _memo(
+        spark,
+        (sf_dir.rstrip("/"), "knn_self_join", k),
+        lambda: _self_knn(spark, sf_dir, max(k, K_DEFAULT))
+        .filter(col("rnk") <= k)
+        .select(
+            "qid", "tid", col("rnk").cast("long").alias("rnk"),
+            F.round("dist", 4).alias("dist"),
+        ),
     )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(col("qid"), col("tid")),
-                F.struct(col("tid").alias("qid"), col("qid").alias("tid")),
-            )
-        ).alias("p"),
-        "dist",
-    ).select("p.*", "dist")
-    edges = topk(pairs, k).select(
-        "qid", "tid", col("rnk").cast("long").alias("rnk"), F.round("dist", 4).alias("dist")
-    ).localCheckpoint(eager=True)
-    _SELF_JOIN_MEMO.put(spark, memo_key, edges)
-    return edges
 
 
 # ------------------------------------------------------------------ queries

@@ -1,25 +1,24 @@
-"""Blockwise GEMM kNN — the engine's custom physical strategy
+"""Blockwise GEMM kNN — the engine's exact kNN kernel
 (SURVEY.md §4: "tiled/blocked distance computation", the CUDA-kernel slot).
 
 The reference's CUDA half computes a tiled query×train distance matrix in
 shared memory [P:Garcia08]; the Spark-native equivalent is a
-``mapInPandas`` stage over *train* partitions:
+``mapInArrow`` stage over *train* partitions:
 
 - The (small) query block is collected once and broadcast to every
   executor — the DistributedCache / pinned-device-memory analog.
-- Each partition stacks its train vectors into one NumPy matrix and
-  computes all distances via the GEMM decomposition
-  ``||q-t||² = ||q||² + ||t||² - 2·q@tᵀ`` [P:Li19-GDS] — one BLAS call
-  per partition instead of 64-element fold-left per pair.
+- Each partition selects candidates with one f32 GEMM per tile,
+  ``||q-t||² = ||q||² + ||t||² - 2·q@tᵀ`` [P:Li19-GDS], then recomputes
+  their distances as the f64 left fold of ``sq_dist_fold`` — bit-identical
+  to the Catalyst expression path, so ranks and tie-breaks cannot move.
 - Per-partition top-k (``argpartition``) is the MapReduce Combiner: only
-  ``n_queries × k`` candidate rows per partition cross the shuffle, never
-  the full cross product.
+  ``n_queries × k`` candidate rows per partition cross the shuffle.
 - A final window ``row_number() <= k`` merges partition-local candidates.
 
-Scale: train side streams partition-by-partition (100 TB fine); query
-side must fit in executor memory (chunk the query set and union for
-larger probe sets). Swap ``np`` for CuPy to run the identical logic on
-GPU — the design point BASELINE.json's north star calls out.
+It serves both graded kNN memos (operators.knn, one all-points pass),
+the bench and the chunked kNN join. The query side must fit in executor
+memory (``knn_topk_gemm_chunked`` loops over bounded query blocks).
+Swap ``np`` for CuPy to run the identical GEMM on GPU.
 """
 
 from __future__ import annotations
@@ -60,57 +59,61 @@ def _pair_scores(qmat: np.ndarray, tmat: np.ndarray, use_cupy: bool) -> np.ndarr
     """q @ tᵀ on the requested backend; always returns a host ndarray.
     The flag is resolved driver-side and captured in the task closure so
     the whole job runs one backend (workers re-import this module, so a
-    module-global flip would not propagate).
-
-    The train operand is materialized (dim, n_t) C-contiguous before the
-    multiply: this container's OpenBLAS dgemm runs ~3× faster on the
-    pre-transposed layout than on the F-contiguous ``tmat.T`` view
-    (measured 1.08 s vs 3.03 s for 8192×64 @ 64×10000), and the copy is
-    an O(n_t·dim) drop against the O(n_q·n_t·dim) multiply."""
+    module-global flip would not propagate). The NumPy train operand is
+    pre-transposed C-contiguous: OpenBLAS dgemm runs ~3× faster on it
+    than on the ``tmat.T`` view (1.08 s vs 3.03 s, 8192×64 @ 64×10000)."""
     if use_cupy and _cp is not None:
         return _cp.asnumpy(_cp.asarray(qmat) @ _cp.asarray(tmat).T)
     return qmat @ np.ascontiguousarray(tmat.T)
 
 
 def _ensure_parallel(train_df: DataFrame, min_partitions: int | None) -> DataFrame:
-    """Optional explicit fan-out hint for the GEMM stage. When None
-    (the default) the input layout is trusted: a large parquet relation
-    already arrives split by ``spark.sql.files.maxPartitionBytes``
-    (thousands of partitions at 100 TB), and AQE coalesces post-shuffle
-    layouts — so there is nothing to probe. The previous auto-probe
-    (``.rdd.getNumPartitions()`` + ``count()``) cost a DataFrame→RDD
-    conversion plan plus an extra job on every invocation in the
-    flagship hot path (VERDICT r01); callers that really have one giant
-    unsplittable partition pass ``min_partitions`` explicitly."""
+    """Optional explicit fan-out hint for the GEMM stage. When None the
+    input layout is trusted (parquet arrives split by maxPartitionBytes,
+    AQE coalesces shuffles) — probing it cost a job per call (VERDICT r01)."""
     if min_partitions and min_partitions > 1:
         return train_df.repartition(min_partitions)
     return train_df
 
 
 #: extra candidates fetched per partition in float32 selection mode —
-#: the exact f64 rerank then keeps the true top-k. f32 relative error is
-#: ~1e-7, so a true neighbor would have to sit more than OVERFETCH ranks
-#: past k purely on last-float noise to be missed. For the cases where
-#: that CAN happen (>OVERFETCH candidates tied or f32-indistinguishable
-#: at the k-th boundary — duplicated/clustered embeddings), the kernel
-#: detects the boundary condition after the f64 rerank and recomputes
-#: the affected query rows fully in f64 (ADVICE r02), so the emitted
-#: top-k is exact for every input, not almost-every input.
+#: the exact f64 rerank then keeps the true top-k. Where f32 noise could
+#: still hide a neighbor (>OVERFETCH candidates tied or f32-
+#: indistinguishable at the k-th boundary), the kernel detects it after
+#: the rerank and redoes those query rows fully in f64 (ADVICE r02), so
+#: the emitted top-k is exact for every input.
 OVERFETCH = 16
 
-#: relative tolerance for the f32 boundary-tie detection: the f32
-#: distance assembly (norms + GEMM dot, dim-length accumulations) has
-#: absolute error ≲ dim·eps32·2·(‖q‖²+‖t‖²) ≈ 1.5e-5·scale at dim=64;
-#: 1e-4 gives ~6× margin THERE, but the bound grows linearly with dim,
-#: so kernels scale it by dim/64 past the calibration point (review
-#: r08: a fixed 1e-4 loses its margin by dim≈1024 and an excluded true
-#: neighbor would no longer trigger the exact-f64 redo). A false
-#: positive only costs an exact f64 recompute of that query row.
+#: relative tolerance of the f32 boundary-tie detection: the f32
+#: assembly's absolute error is ≲ dim·eps32·2·(‖q‖²+‖t‖²) ≈ 1.5e-5·scale
+#: at dim=64 (~6× margin), scaled by dim/64 past that (review r08). A
+#: false positive only costs an exact f64 recompute of that query row.
 F32_TIE_RTOL = 1e-4
 
+#: summed squared norms past which ‖q‖²+‖t‖²−2q·t may overflow f32
+#: (max ≈ 3.4e38, e.g. an f32-max embedding component).
+F32_SAFE_SCALE = 1e37
 
-def _f32_tie_rtol(dim: int) -> float:
-    return F32_TIE_RTOL * max(1.0, dim / 64.0)
+
+def _f32_tie_tol(dim: int, scale: float) -> float:
+    """Absolute tolerance of an f32 dist²/score over squared norms summing
+    to ``scale``, plus a floor for squares that underflow f32; infinite
+    (every row redone in f64) when the f32 values may have overflowed."""
+    if not scale < F32_SAFE_SCALE:
+        return np.inf
+    return F32_TIE_RTOL * max(1.0, dim / 64.0) * scale + dim * 2.0**-140
+
+
+def sq_dist_fold(q_dims, t_dims):
+    """Σ_j (q[j]-t[j])² as a LEFT fold from 0.0 over j = 0..d-1 — the order
+    of ``functions.vector.sq_euclidean``'s ``aggregate(zip_with(...))``,
+    so the result is bit-identical to it (numpy's sum/einsum add pairwise).
+    Arguments yield one array or scalar per dimension (e.g. ``mat.T``)."""
+    acc = 0.0
+    for qj, tj in zip(q_dims, t_dims):
+        dj = qj - tj
+        acc = acc + dj * dj
+    return acc
 
 
 def _safe_norm(mat):
@@ -119,14 +122,28 @@ def _safe_norm(mat):
     by the tid tie-break) instead of a NaN row that the isfinite filter
     silently DROPS from the output (review r08: the euclidean twin
     returns rows for the same input, so the contracts diverged)."""
-    import numpy as np
-
     n = np.linalg.norm(mat, axis=1, keepdims=True)
     n[n == 0.0] = 1.0
     return n
 
 
 def knn_topk_gemm(
+    queries_df: DataFrame, train_df: DataFrame, k: int = 10, *args, **kwargs
+) -> DataFrame:
+    """Exact top-k neighbors of each query among train, GEMM-accelerated:
+    ``knn_candidates_gemm`` (same arguments) under the final window.
+    Returns (qid, tid, rnk, dist) with rnk 1..k, ties broken on tid —
+    same contract as operators.knn.topk."""
+    local = knn_candidates_gemm(queries_df, train_df, k, *args, **kwargs)
+    w = Window.partitionBy("qid").orderBy(F.asc_nulls_last("dist"), "tid")
+    return (
+        local.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(col("rnk") <= k)
+        .select("qid", "tid", "rnk", "dist")
+    )
+
+
+def knn_candidates_gemm(
     queries_df: DataFrame,
     train_df: DataFrame,
     k: int = 10,
@@ -136,31 +153,22 @@ def knn_topk_gemm(
     precision: str = "float32",
     broadcast_out: list | None = None,
 ) -> DataFrame:
-    """Exact top-k neighbors of each query among train, GEMM-accelerated.
+    """Per-train-partition top-k candidates (qid, tid, dist) of each query
+    — a superset of its true top-k; the caller's (dist, tid) window picks
+    the final k. queries_df: (qid long, qemb array<double>); train_df:
+    (tid long, temb array<double>).
 
-    queries_df: (qid long, qemb array<double>); train_df: (tid long,
-    temb array<double>). Returns (qid, tid, rnk, dist) with rnk 1..k,
-    ties broken on tid — same contract as operators.knn.topk.
     backend: 'cupy' | 'numpy' | None (auto: CuPy when a device exists).
-    precision: 'float32' (default) runs the big GEMM in f32 — exactly
-    what the CUDA kernels this slot models do — selects k+OVERFETCH
-    candidates per partition, recomputes their distances exactly in f64
-    (sum of squared diffs, the expression-path formula), and falls back
-    to an exact full-f64 scan for any query row whose k-th reranked
-    distance lands within f32 tolerance of the selection boundary
-    (OVERFETCH/_f32_tie_rtol) — so emitted distances, ranks, AND the
-    tid tie-break contract match the EXPRESSION-PATH exact formula
-    (sum of squared diffs) on every input. Note the asymmetry (review
-    r08): precision='float64' keeps the GEMM *decomposition*
-    ‖q‖²+‖t‖²−2q·t end to end, whose catastrophic-cancellation error
-    (≲ dim·eps64·2·scale, clamped at 0) is what the CUDA kernels this
-    slot models emit; for near-duplicate vectors its ordering can
-    differ from the exact formula within that noise floor, while the
-    default f32 path reranks candidates with the exact formula and is
-    therefore the MORE exact of the two despite the name.
-    This container's OpenBLAS runs sgemm ~16× faster than dgemm under
-    32-way worker concurrency (measured; see SCALE.md §9).
-    'float64' keeps the whole kernel in doubles.
+    precision: 'float32' (default) selects k+OVERFETCH candidates with an
+    f32 GEMM — what the CUDA kernels this slot models do — recomputes
+    their distances with ``sq_dist_fold`` and redoes in f64 any query row
+    whose k-th distance is not provably below the f32 selection boundary,
+    so distances, ranks and tid tie-breaks equal the expression path's on
+    every input. precision='float64' keeps the GEMM *decomposition*
+    ‖q‖²+‖t‖²−2q·t end to end: its cancellation error (≲ dim·eps64·2·scale,
+    clamped at 0) can reorder near-duplicates (review r08), so the f32
+    path is the exact one despite the name (and sgemm runs ~16× faster
+    than dgemm here under 32-way concurrency, SCALE.md §9).
     broadcast_out: when a list is passed, the query Broadcast handle is
     appended so a chunked caller can destroy it once the block's result
     is materialized (bounded residency, VERDICT r02 #3).
@@ -171,14 +179,11 @@ def knn_topk_gemm(
     use_cupy = (backend or gemm_backend()) == "cupy"
     use_f32 = precision == "float32" and not use_cupy
     # NULL vectors cannot enter the GEMM (np.stack over a ragged batch
-    # crashes the job — r09 null-injection sweep); a null embedding has
-    # no defined distance, so such rows are excluded from both sides —
-    # the expression twin's NULL distances likewise never outrank a real
-    # candidate. Documented engine convention for every kernel consumer.
-    # The TRAIN side filters lazily; the QUERY side filters in pandas
-    # AFTER the one permitted collect — a Filter node atop a caller's
-    # limit() would defeat CollectLimit's single-job toPandas and add a
-    # construction job (pinned by test_gemm_no_eager_jobs_on_construction).
+    # crashes the job — r09 null-injection sweep), so both sides exclude
+    # them; callers that rank NULL distances (the operators.knn memos)
+    # restore them as NULL-dist candidates. The QUERY side filters in
+    # pandas AFTER the one permitted collect — a Filter atop a caller's
+    # limit() would add a construction job (test_gemm_no_eager_jobs_on_construction).
     train_df = train_df.filter(F.col("temb").isNotNull())
     train_df = _ensure_parallel(train_df, min_partitions)
     qpdf = queries_df.toPandas()
@@ -186,9 +191,7 @@ def knn_topk_gemm(
     if len(qpdf) == 0:
         # an empty probe set (e.g. a chunked block whose metadata-derived
         # count over-stated a filtered relation) must not reach np.stack
-        return spark.createDataFrame(
-            [], "qid long, tid long, rnk long, dist double"
-        )
+        return spark.createDataFrame([], "qid long, tid long, dist double")
     qids = qpdf["qid"].to_numpy()
     qmat = np.stack(qpdf["qemb"].to_numpy())
     q_bc = spark.sparkContext.broadcast((qids, qmat))
@@ -199,6 +202,7 @@ def knn_topk_gemm(
         b_qids, b_qmat = q_bc.value
         gmat = b_qmat.astype(np.float32) if use_f32 else b_qmat
         qnorm = (gmat * gmat).sum(axis=1)
+        q_dims = np.ascontiguousarray(b_qmat.T)
         # depends only on the broadcast qids — build once, not per
         # Arrow batch (review r08: a 100k-query block over 10k-row
         # batches rebuilt this dict 100x per partition)
@@ -221,6 +225,7 @@ def knn_topk_gemm(
                 # (this OpenBLAS runs ~3× faster on the C-contiguous
                 # transposed operand than on the .T view)
                 tsel_t = np.ascontiguousarray(tsel.T)
+            t_dims = np.ascontiguousarray(tmat.T) if use_f32 else None  # for the fold
             if not use_f32 and "__gemm_tnorm" in batch.schema.names:
                 # precomputed once in the cached train relation
                 # (knn_topk_gemm_chunked) — not per block. The dunder
@@ -260,33 +265,27 @@ def knn_topk_gemm(
                     idx = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
                     # exact f64 rerank of the selected candidates only:
                     # O(tile·kk·dim) vs the O(tile·n_t·dim) GEMM
-                    diff = b_qmat[s:e, None, :] - tmat[idx]
-                    d2k = (diff * diff).sum(axis=2)
+                    d2k = sq_dist_fold(q_dims[:, s:e, None], (c[idx] for c in t_dims))
                     if exclude_self:
                         d2k[b_qids[s:e, None] == tids[idx]] = np.inf
                     if kk < len(tids):
-                        # Boundary-tie guard (ADVICE r02): every excluded
-                        # point has f32 dist² ≥ the selection boundary
-                        # (the kk-th smallest f32 value). If a row's k-th
-                        # reranked f64 dist² reaches within f32 tolerance
-                        # of that boundary, an excluded point could be a
-                        # true neighbor (or a smaller-tid tie) — redo
-                        # those rows with an exact f64 scan + tid-stable
-                        # selection. Rare by construction (needs more
-                        # than OVERFETCH candidates inside f32 noise of
-                        # the k-th distance), so the O(n_t·dim) row cost
-                        # doesn't affect the common path.
+                        # Boundary-tie guard (ADVICE r02): excluded points
+                        # have f32 dist² ≥ the kk-th f32 value. Unless a
+                        # row's k-th exact dist² is below it by more than
+                        # the f32 tolerance (never true for a NaN bound
+                        # or an overflowed norm), an excluded point could
+                        # be a neighbor or smaller-tid tie: redo the row
+                        # with an exact fold scan + tid-stable selection.
                         rows = np.arange(idx.shape[0])
                         bound32 = d2[rows, idx[:, kk - 1]].astype(np.float64)
                         kth64 = np.partition(d2k, min(k, kk) - 1, axis=1)[
                             :, min(k, kk) - 1
                         ]
-                        tol = _f32_tie_rtol(tmat.shape[1]) * (
-                            float(qnorm[s:e].max()) + float(tnorm.max())
+                        tol = _f32_tie_tol(
+                            tmat.shape[1], float(qnorm[s:e].max()) + float(tnorm.max())
                         )
-                        for r in np.nonzero(kth64 >= bound32 - tol)[0]:
-                            dr = b_qmat[s + r] - tmat
-                            dd = np.einsum("ij,ij->i", dr, dr)
+                        for r in np.nonzero(~(kth64 < bound32 - tol))[0]:
+                            dd = sq_dist_fold(q_dims[:, s + r], t_dims)
                             if exclude_self:
                                 dd[tids == b_qids[s + r]] = np.inf
                             exact_sel = np.lexsort((tids, dd))[:kk]
@@ -318,18 +317,15 @@ def knn_topk_gemm(
                 rows_q = np.repeat(b_qids[s:e], kk)
                 rows_t = tids[idx.ravel()]
                 rows_d = np.sqrt(d2k.ravel())
-                keep = np.isfinite(rows_d)
+                # self pairs go by id: an overflowed +inf dist still ranks
+                keep = ~np.isnan(rows_d)
+                if exclude_self:
+                    keep &= rows_q != rows_t
                 yield pa.RecordBatch.from_pydict(
                     {"qid": rows_q[keep], "tid": rows_t[keep], "dist": rows_d[keep]}
                 )
 
-    local = train_df.mapInArrow(block_knn, "qid long, tid long, dist double")
-    w = Window.partitionBy("qid").orderBy(F.asc_nulls_last("dist"), "tid")
-    return (
-        local.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(col("rnk") <= k)
-        .select("qid", "tid", "rnk", "dist")
-    )
+    return train_df.mapInArrow(block_knn, "qid long, tid long, dist double")
 
 
 def _rows_upper_bound(df: DataFrame) -> int | None:
@@ -536,13 +532,13 @@ def cosine_topk_gemm(
                     if kk < len(tids):
                         # boundary-tie guard, similarity-descending twin
                         # of the knn_topk_gemm guard (ADVICE r02): unit
-                        # vectors ⇒ absolute tolerance ~_f32_tie_rtol(dim).
+                        # vectors ⇒ unit scale.
                         rows = np.arange(idx.shape[0])
                         bound32 = cos[rows, idx[:, kk - 1]].astype(np.float64)
                         kth64 = -np.partition(-cosk, min(k, kk) - 1, axis=1)[
                             :, min(k, kk) - 1
                         ]
-                        ctol = _f32_tie_rtol(tmat.shape[1])
+                        ctol = _f32_tie_tol(tmat.shape[1], 1.0)
                         for r in np.nonzero(kth64 <= bound32 + ctol)[0]:
                             dd = tmat @ b_qmat[s + r]
                             if exclude_self:

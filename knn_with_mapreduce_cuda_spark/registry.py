@@ -59,7 +59,7 @@ SURVEY_QKEYS = [
 ]
 
 
-#: Round-11 rotation window — the POST-CLOSURE freshness policy
+#: Rotation window — the POST-CLOSURE freshness policy
 #: (VERDICT r08 "Next round" #2), extended per VERDICT r10 #4 to weight
 #: the window toward "edited-oracle ∩ stalest". Staleness = rounds
 #: since a key's newest driver CORRECTNESS row, ties broken FIRST by
@@ -72,50 +72,49 @@ SURVEY_QKEYS = [
 #: (tests/test_contract.py freshness bound). _RE_EARNED keys
 #: (output-changed) jump the queue entirely; never-graded keys rank as
 #: staleness=∞ and front automatically. This list must equal
-#: compute_stale_window(50) — enforced by tests/test_contract.py. This
-#: round: the full 18-key r03 stratum (llm_topic_coherence + 17 tpch)
-#: plus 30 evidence-lagged r04 keys plus the 2 first untouched r04 keys.
+#: compute_stale_window(50) — enforced by tests/test_contract.py. Current
+#: window (regenerated after CORRECTNESS_r12.json re-graded the r11
+#: window): the full 18-key r04 stratum plus the first 32 of the 41
+#: evidence-lagged r05 keys.
 _ROTATE_FRONT = [
-    "llm_topic_coherence", "tpch_q1", "tpch_q3",
-    "tpch_q4", "tpch_q5", "tpch_q6",
-    "tpch_q7", "tpch_q8", "tpch_q9",
-    "tpch_q10", "tpch_q12", "tpch_q13",
-    "tpch_q14", "tpch_q15", "tpch_q17",
-    "tpch_q18", "tpch_q19", "tpch_q22",
-    "graph_knn_hubness", "knn_crossval", "ml_lof",
-    "ml_silhouette", "ml_auc_ovr", "graph_triangles",
-    "ml_linreg_normal", "llm_simsearch_pq", "llm_simsearch_ivfpq",
-    "llm_simsearch_hamming", "llm_mix_budget", "llm_heavy_hitters_cms",
-    "llm_dedup_bloom", "ts_holt_linear", "ml_ks_test",
-    "ml_decision_stump", "graph_khop_reach", "ml_roc_curve",
-    "ml_calibration_knn", "graph_label_prop", "graph_bfs_dist",
-    "ml_pr_curve", "graph_clustering_coeff", "ml_logreg_irls1",
-    "graph_kcore_peel", "ts_decompose_stl", "graph_modularity",
-    "llm_bigram_crossentropy", "ml_conformal_knn", "graph_hits",
-    "rel_sample_weighted", "ts_resample_locf",
+    "str_attribution_linear", "ml_mi_lang_source", "ts_periodogram",
+    "llm_minhash_est_vs_exact", "llm_tfidf_cosine_pairs", "ts_ljung_box",
+    "llm_perplexity_unigram", "ts_hurst_rs", "rel_skyline_pareto",
+    "str_retention_cohort", "ts_autocorr", "ts_cusum",
+    "ts_changepoint", "llm_dedup_threshold_sweep", "ts_trend_theil_sen",
+    "ml_assoc_rules", "llm_edit_distance_pairs", "ts_mann_kendall",
+    "knn_classify_weighted", "knn_k_sweep", "knn_radius",
+    "knn_radius_pivot", "knn_centroid", "knn_mutual",
+    "knn_predict_proba", "knn_kth_dist", "llm_simsearch_pq_stored",
+    "llm_simsearch_ivfpq_stored", "graph_linkpred_jaccard", "llm_zipf_slope",
+    "ml_spearman_rho", "ml_kendall_tau", "graph_assortativity",
+    "str_power_users_pareto", "graph_component_sizes", "ts_interp_linear",
+    "ml_gains_table", "ts_drawdown", "ts_sax_symbols",
+    "graph_degree_gini", "ts_cross_correlation", "ml_ndcg_at10",
+    "ml_cluster_purity_nmi", "ml_kmeans_inertia", "ml_learning_curve",
+    "str_user_temporal_entropy", "ml_ivf_recall_at10", "graph_reciprocity",
+    "ml_embed_drift_ks", "ts_acf_significance",
 ]
 
 #: Keys whose ORACLE string or QUERIES function source changed AFTER
 #: their newest driver CORRECTNESS row (generated by
-#: scripts/rotation_r11.py, which diffs HEAD against a git worktree of
-#: each key's graded tree). The r10 robustness sweeps (try_divide
-#: conventions, poisoned-vector emb CTEs, asc_nulls_last windows)
-#: touched 135 keys — more than one 50-slot window; compute_stale_window
+#: scripts/rotation_r11.py, which diffs HEAD against a ``git archive``
+#: export of each key's graded tree). The r10–r12 robustness sweeps and
+#: optimizations (try_divide conventions, poisoned-vector emb CTEs,
+#: asc_nulls_last windows, half-fold pair spaces) leave 176 keys
+#: lagged — more than one 50-slot window; compute_stale_window
 #: drains them stalest-stratum-first, lag-first within a stratum, and
 #: this list shrinks as rounds regrade (regenerate it each round).
-#: Every key here was re-verified against its oracle by the round-10
-#: builder+judge full-registry sweeps on the final r10 tree — the lag
-#: is driver-evidence currency, not correctness doubt.
+#: Every key here is re-verified against its oracle by the
+#: full-registry ``run_oracle.py --both`` sweep — the lag is
+#: driver-evidence currency, not correctness doubt.
 _EVIDENCE_LAG = [
-    "graph_assortativity", "graph_bfs_dist", "graph_clustering_coeff",
-    "graph_component_sizes", "graph_degree_entropy", "graph_degree_gini",
-    "graph_edge_length_stats", "graph_hits", "graph_kcore_peel",
-    "graph_khop_reach", "graph_knn_hubness", "graph_label_prop",
-    "graph_linkpred_jaccard", "graph_modularity", "graph_reciprocity",
-    "graph_summary_stats", "graph_transitivity", "graph_triangles",
-    "knn_accuracy", "knn_allpairs", "knn_centroid",
-    "knn_classify", "knn_classify_weighted", "knn_confusion",
-    "knn_crossval", "knn_dist_chebyshev", "knn_dist_cosine",
+    "graph_assortativity", "graph_component_sizes", "graph_components_dedup",
+    "graph_degree_entropy", "graph_degree_gini", "graph_edge_length_stats",
+    "graph_linkpred_jaccard", "graph_reciprocity", "graph_summary_stats",
+    "graph_transitivity", "knn_accuracy", "knn_allpairs",
+    "knn_centroid", "knn_classify", "knn_classify_weighted",
+    "knn_confusion", "knn_dist_chebyshev", "knn_dist_cosine",
     "knn_dist_dot", "knn_dist_euclidean", "knn_dist_hamming",
     "knn_dist_manhattan", "knn_dist_minkowski", "knn_dist_seuclidean",
     "knn_dist_sqeuclidean", "knn_join", "knn_k_sweep",
@@ -123,35 +122,52 @@ _EVIDENCE_LAG = [
     "knn_normalize_unit", "knn_normalize_zscore", "knn_predict_proba",
     "knn_radius", "knn_radius_pivot", "knn_regress",
     "knn_scan", "knn_topk", "llm_ann_lsh",
-    "llm_bigram_crossentropy", "llm_dataset_card", "llm_dedup_bloom",
-    "llm_embed_outliers", "llm_embed_quantize", "llm_heaps_law",
-    "llm_heavy_hitters_cms", "llm_mix_budget", "llm_multimodal_features",
+    "llm_dataset_card", "llm_dedup_embed", "llm_dedup_incremental",
+    "llm_dedup_minhash_mllib", "llm_dedup_simhash", "llm_embed_outliers",
+    "llm_embed_quantize", "llm_heaps_law", "llm_keywords_per_doc",
+    "llm_minhash_est_vs_exact", "llm_mix_temperature", "llm_multimodal_features",
     "llm_multimodal_framesample", "llm_multimodal_join", "llm_multimodal_resize",
-    "llm_ngram_novelty", "llm_semdedup", "llm_simsearch_gemm",
-    "llm_simsearch_hamming", "llm_simsearch_ivfpq", "llm_simsearch_ivfpq_stored",
-    "llm_simsearch_pq", "llm_simsearch_pq_stored", "llm_simsearch_topk",
-    "llm_text_ngram_char", "llm_topic_coherence", "ml_ab_test_proportions",
-    "ml_auc_ovr", "ml_average_precision", "ml_balanced_accuracy",
-    "ml_best_f1_threshold", "ml_brier_score", "ml_calibration_knn",
-    "ml_cluster_purity_nmi", "ml_cohens_kappa", "ml_conformal_knn",
-    "ml_decision_stump", "ml_dim_ablation", "ml_dist_concentration",
-    "ml_ece", "ml_embed_drift_ks", "ml_f1_scores",
-    "ml_feature_gain", "ml_gains_table", "ml_ivf_recall_at10",
-    "ml_kendall_tau", "ml_kmeans_inertia", "ml_ks_test",
-    "ml_label_noise_flags", "ml_learning_curve", "ml_linreg_normal",
-    "ml_lof", "ml_log_loss", "ml_logreg_irls1",
+    "llm_ngram_novelty", "llm_pack_sequences", "llm_perplexity_unigram",
+    "llm_pipeline_e2e", "llm_quality_score", "llm_search_bm25",
+    "llm_semdedup", "llm_simsearch_gemm", "llm_simsearch_ivfpq_stored",
+    "llm_simsearch_pq_stored", "llm_simsearch_topk", "llm_text_ngram_char",
+    "llm_tfidf_cosine_pairs", "llm_token_entropy", "llm_vocab_kl_divergence",
+    "llm_zipf_slope", "ml_ab_test_proportions", "ml_average_precision",
+    "ml_balanced_accuracy", "ml_best_f1_threshold", "ml_brier_score",
+    "ml_chi2_independence", "ml_cluster_purity_nmi", "ml_cohens_kappa",
+    "ml_dim_ablation", "ml_dist_concentration", "ml_ece",
+    "ml_embed_drift_ks", "ml_f1_scores", "ml_feature_gain",
+    "ml_gains_table", "ml_ivf_recall_at10", "ml_kaplan_meier",
+    "ml_kendall_tau", "ml_kmeans_inertia", "ml_kmeans_lloyd",
+    "ml_label_noise_flags", "ml_learning_curve", "ml_log_loss",
     "ml_lowe_ratio", "ml_mcc", "ml_mcnemar_test",
-    "ml_ndcg_at10", "ml_operating_point_card", "ml_platt_1step",
-    "ml_pr_curve", "ml_precision_at_k", "ml_precision_recall",
-    "ml_recall_at_k", "ml_roc_curve", "ml_silhouette",
-    "ml_spearman_rho", "ml_tpr_at_fixed_fpr", "ml_vote_margin",
-    "ml_youden_threshold", "rel_agg_approx_quantile", "rel_agg_stats",
-    "rel_stat_crosstab", "str_arrival_iat_stats", "str_power_users_pareto",
-    "ts_cross_correlation", "ts_decompose_stl", "ts_gumbel_fit",
-    "ts_holt_linear", "ts_max_drawdown", "ts_peak_detect",
+    "ml_mi_lang_source", "ml_naive_bayes", "ml_ndcg_at10",
+    "ml_operating_point_card", "ml_pca_power", "ml_platt_1step",
+    "ml_precision_at_k", "ml_precision_recall", "ml_psi_drift",
+    "ml_recall_at_k", "ml_spearman_rho", "ml_tpr_at_fixed_fpr",
+    "ml_ttest_welch", "ml_tukey_fences", "ml_vote_margin",
+    "ml_youden_threshold", "rel_agg_approx_quantile", "rel_agg_grouping_sets",
+    "rel_agg_hash", "rel_agg_stats", "rel_column_profile",
+    "rel_fn_array", "rel_fn_date", "rel_fn_date2",
+    "rel_fn_higher_order2", "rel_fn_math", "rel_group_by_all",
+    "rel_histogram_fixed", "rel_histogram_log", "rel_incremental_agg",
+    "rel_join_bloom_prefilter", "rel_join_broadcast", "rel_join_lateral",
+    "rel_join_shuffle", "rel_merge_upsert", "rel_skyline_pareto",
+    "rel_stat_crosstab", "rel_try_arith", "rel_window_percentiles",
+    "rel_window_range_interval", "rel_yoy_growth", "src_csv_roundtrip",
+    "src_jsonl_roundtrip", "src_knn_text_roundtrip", "src_orc_roundtrip",
+    "src_python_datasource", "str_arrival_iat_stats", "str_attribution_linear",
+    "str_churn_labels", "str_cohort_ltv", "str_power_users_pareto",
+    "str_rfm_segments", "str_stateful_map", "str_user_temporal_entropy",
+    "str_window_session", "str_window_sliding", "str_window_tumbling",
+    "ts_acf_significance", "ts_cross_correlation", "ts_drawdown",
+    "ts_gumbel_fit", "ts_hurst_rs", "ts_interp_linear",
+    "ts_ljung_box", "ts_max_drawdown", "ts_ohlc",
+    "ts_peak_detect", "ts_periodogram", "ts_runs_test",
     "ts_sax_symbols", "ts_season_strength", "ts_seasonal_profile",
-    "ts_type_correlation_matrix", "ts_variance_time", "udf_apply_arrow",
-    "udf_arrow_scalar", "udf_grouped_map", "udf_pandas_iter",
+    "ts_spectral_entropy", "ts_type_correlation_matrix", "ts_variance_time",
+    "udf_apply_arrow", "udf_arrow_scalar", "udf_grouped_map",
+    "udf_pandas_iter", "udf_udtf",
 ]
 
 #: Keys whose OUTPUT changed since their last driver row (an

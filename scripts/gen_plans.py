@@ -263,16 +263,16 @@ def main() -> None:
         ["Window", "Exchange", "BroadcastExchange", "HashAggregate"],
     )
     add(
-        "Exact pair joins: streamed-side fan-out (knn_self_join family)",
+        "Exact pair joins: streamed-side fan-out (all_pairs family)",
         "BroadcastNestedLoopJoin parallelism is the streamed side's "
         "partition count — nothing else — so a one-file relation would run "
         "the whole quadratic distance fold in ONE task. The streamed side "
         "is hash-repartitioned to the session default parallelism first "
         "(the O(n) shuffle against the O(n^2 d) fold; knn_self_join "
         "53 s -> 4.3 s at sf0.1, plan-pinned by "
-        "test_knn_pairs_streamed_side_fans_out). The edge list is then "
-        "memoized per session as an eagerly checkpointed n x k relation "
-        "shared by ~15 graph/ML consumers:",
+        "test_knn_pairs_streamed_side_fans_out). The distance, radius and "
+        "cross-validation keys run this pair space; the two kNN memos "
+        "(knn_test_topk, knn_self_join) run the GEMM kernel instead:",
         knn.all_pairs(knn.split_test(e), knn.train_all(e)),
         ["BroadcastNestedLoopJoin", "hashpartitioning(tid", "REPARTITION"],
     )

@@ -21,8 +21,8 @@ window) is:
 This script recomputes the lag set from git evidence and prints the
 two registry literals. Run it at the START of a round, before new
 edits, then paste its output into registry.py. It needs the git repo
-(worktrees of the graded trees) — it is an offline generator, never
-imported at runtime.
+(``git archive`` exports of the graded trees) — it is an offline
+generator, never imported at runtime.
 """
 
 from __future__ import annotations
@@ -45,6 +45,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ARTIFACT_COMMITS = {
     3: "5d4d32c", 4: "a2f1cd9", 5: "82bfb38", 6: "ea970ef",
     7: "710afab", 8: "39801bb", 9: "4fb3d9b", 10: "b695875",
+    11: "71d4085", 12: "98ea813",
 }
 
 DUMP = textwrap.dedent(
@@ -80,22 +81,24 @@ def newest_driver_round() -> dict[str, int]:
 
 def dump_at(commit: str | None, out_path: str) -> dict:
     """{oracle: {key: sha1}, src: {key: sha1}} for HEAD (commit=None)
-    or for a detached worktree of ``commit``."""
+    or for a ``git archive`` export of ``commit``."""
+    import shutil
+
     script = os.path.join(tempfile.gettempdir(), "rot_dump.py")
     open(script, "w").write(DUMP)
     if commit is None:
         subprocess.run([sys.executable, script, out_path], cwd=ROOT, check=True,
                        capture_output=True)
     else:
-        wt = tempfile.mkdtemp(prefix="rot_wt_")
-        subprocess.run(["git", "worktree", "add", "--detach", "-f", wt, commit],
-                       cwd=ROOT, check=True, capture_output=True)
+        tree = tempfile.mkdtemp(prefix="rot_tree_")
         try:
-            subprocess.run([sys.executable, script, out_path], cwd=wt, check=True,
+            archive = subprocess.run(["git", "archive", commit], cwd=ROOT,
+                                     check=True, capture_output=True).stdout
+            subprocess.run(["tar", "-x", "-C", tree], input=archive, check=True)
+            subprocess.run([sys.executable, script, out_path], cwd=tree, check=True,
                            capture_output=True)
         finally:
-            subprocess.run(["git", "worktree", "remove", "--force", wt],
-                           cwd=ROOT, check=True, capture_output=True)
+            shutil.rmtree(tree, ignore_errors=True)
     return json.load(open(out_path))
 
 

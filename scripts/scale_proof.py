@@ -474,7 +474,7 @@ def graph_stress(spark) -> dict:
         build = round(time.perf_counter() - t0, 3)
         # seed the self-join memo: graded operators now consume the
         # GEMM-built edge list through their normal code path
-        knnmod._SELF_JOIN_MEMO.put(
+        knnmod._KNN_MEMO.put(
             spark, (SCRATCH_ANN.rstrip("/"), "knn_self_join", knnmod.K_JOIN), edges
         )
         fx: dict = {

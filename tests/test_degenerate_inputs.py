@@ -417,6 +417,50 @@ def test_null_text_multimodal_matches_oracle(spark, nulls_sf):
         con.close()
 
 
+def test_knn_memos_rank_null_vectors_like_expression_path(spark, nulls_sf):
+    """README corrupt-data contract 1–2 through the kNN memos. The GEMM
+    kernel behind them excludes NULL vectors; the memos restore those
+    pairs as NULL-dist candidates, so the poisoned query (vec_id 50, in
+    the %5 test split) keeps its smallest-tid candidates with NULL dist
+    and the poisoned train vector ranks after every finite one — both
+    memos equal the BNLJ expression reference row for row, dist bit for
+    bit."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import col
+
+    from knn_with_mapreduce_cuda_spark import tables
+    from knn_with_mapreduce_cuda_spark.operators import knn
+
+    e = tables.embeddings(spark, nulls_sf)
+    cols = ("qid", "tid", "rnk", "dist", "qlabel", "tlabel")
+
+    def rows(df, cols=cols):
+        out = [
+            tuple(v.hex() if isinstance(v, float) else v for v in r)
+            for r in df.select(*cols).collect()
+        ]
+        return sorted(out, key=lambda r: (r[0], r[2]))
+
+    def reference(q, k):
+        return knn.topk(knn.with_distance(knn.all_pairs(q, knn.train_all(e))), k)
+
+    got = rows(knn.knn_test_topk(spark, nulls_sf, knn.K_DEFAULT))
+    assert got == rows(reference(knn.split_test(e), knn.K_DEFAULT))
+    assert any(r[0] == 50 and r[3] is None for r in got)  # poisoned query
+    assert any(r[0] != 50 and r[1] == 50 and r[3] is None for r in got)  # poisoned train
+
+    everyone = e.select(
+        col("vec_id").alias("qid"), col("emb").alias("qemb"), col("label").alias("qlabel")
+    )
+    want = reference(everyone, knn.K_JOIN).select(
+        "qid", "tid", col("rnk").cast("long").alias("rnk"), F.round("dist", 4).alias("dist")
+    )
+    edge_cols = ("qid", "tid", "rnk", "dist")
+    assert rows(knn.knn_self_join(spark, nulls_sf, knn.K_JOIN), edge_cols) == rows(
+        want, edge_cols
+    )
+
+
 def test_bench_rows_run_on_degenerate_fixture(spark, degenerate_sf, tmp_path, monkeypatch):
     """VERDICT r09 #7: the r09 sweeps covered all 368 graded queries but
     the bench probes build their own frames and were never swept — yet

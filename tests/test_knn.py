@@ -76,28 +76,75 @@ def test_classify_majority_vote(spark, corpus):
         assert pred.loc[qid, "true_label"] == label_of[qid]
 
 
-def test_self_join_half_fold_edges_identical(spark):
-    """r12: knn_self_join folds only qid < tid pairs and mirrors them
-    inline before the top-k window (d symmetric bit-identically). The
-    memoized edge list must equal the straightforward full-ordered-pair
-    construction, row for row."""
+def _by_rank(pdf):
+    return pdf.sort_values(["qid", "rnk"]).reset_index(drop=True)
+
+
+def _assert_bits_equal(got, want, cols):
+    """Row-for-row equality; float columns compared on their bit patterns
+    (NaN stands for a NULL distance, and NaN == NaN bitwise here)."""
+    assert len(got) == len(want)
+    for c in cols:
+        g, w = got[c].to_numpy(), want[c].to_numpy()
+        if w.dtype.kind == "f":
+            assert np.array_equal(g.astype(np.float64).view("u8"), w.view("u8")), c
+        else:
+            assert np.array_equal(g, w), c
+
+
+def _expression_reference(e, q, k):
+    """The pair-space twin both memos must equal: BNLJ → zip_with fold →
+    (dist, tid) window."""
+    return _by_rank(
+        knn.topk(knn.with_distance(knn.all_pairs(q, knn.train_all(e))), k)
+        .select("qid", "tid", "rnk", "dist", "qlabel", "tlabel")
+        .toPandas()
+    )
+
+
+def test_knn_memos_bit_identical_to_expression_path(spark):
+    """Both kNN memos come from one GEMM kernel pass whose f64 left-fold
+    distances equal the expression path's bit for bit: ids, ranks and the
+    UNROUNDED dist of knn_test_topk and of the shared self-kNN pass match
+    the all_pairs → with_distance → topk reference exactly, and
+    knn_self_join is that reference rounded."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import col
 
+    tables.invalidate_caches(SF_SMOKE)
     e = tables.embeddings(spark, SF_SMOKE)
-    q = e.select(
-        col("vec_id").alias("qid"),
-        col("emb").alias("qemb"),
-        col("label").alias("qlabel"),
+    cols = ["qid", "tid", "rnk", "dist", "qlabel", "tlabel"]
+
+    want = _expression_reference(e, knn.split_test(e), K)
+    got = _by_rank(knn.knn_test_topk(spark, SF_SMOKE, K).toPandas())
+    _assert_bits_equal(got, want, cols)
+
+    everyone = e.select(
+        col("vec_id").alias("qid"), col("emb").alias("qemb"), col("label").alias("qlabel")
     )
-    ref = (
-        knn.topk(knn.with_distance(knn.all_pairs(q, knn.train_all(e))), knn.K_JOIN)
-        .select(
-            "qid", "tid", col("rnk").cast("long").alias("rnk"),
-            F.round("dist", 4).alias("dist"),
-        )
+    want = _expression_reference(e, everyone, K)
+    got = _by_rank(knn._self_knn(spark, SF_SMOKE, K).toPandas())
+    _assert_bits_equal(got, want, cols)
+
+    want = (
+        spark.createDataFrame(want[want.rnk <= knn.K_JOIN][["qid", "tid", "rnk", "dist"]])
+        .select("qid", "tid", col("rnk").cast("long"), F.round("dist", 4).alias("dist"))
         .toPandas()
     )
-    got = knn.knn_self_join(spark, SF_SMOKE, knn.K_JOIN).toPandas()
-    key = lambda df: sorted(map(tuple, df.itertuples(index=False)))  # noqa: E731
-    assert key(got) == key(ref)
+    got = _by_rank(knn.knn_self_join(spark, SF_SMOKE, knn.K_JOIN).toPandas())
+    _assert_bits_equal(got, _by_rank(want), ["qid", "tid", "rnk", "dist"])
+
+
+def test_self_join_after_test_topk_runs_no_second_kernel(spark):
+    """knn_test_topk builds the one self-kNN pass; knn_self_join in the
+    same session is a filter over its checkpoint — constructing it runs
+    no job, and its plan holds no MapInArrow kernel stage (nor a BNLJ)."""
+    tables.invalidate_caches(SF_SMOKE)
+    knn.knn_test_topk(spark, SF_SMOKE, K)
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    edges = knn.knn_self_join(spark, SF_SMOKE, knn.K_JOIN)
+    assert len(tracker.getJobIdsForGroup(None) or []) == before
+    edges.collect()
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan and "NestedLoopJoin" not in plan, plan

@@ -198,6 +198,39 @@ def test_gemm_tie_guard_exact_under_mass_ties(spark, precision):
     assert got_tids == [0, 1, 2] + [100 + i for i in range(k - 3)], got_tids
 
 
+@pytest.mark.parametrize("case", ["overflow", "underflow"])
+def test_gemm_exact_outside_f32_range(spark, case):
+    """f32 selection scores bound nothing when the f32 assembly overflows
+    (an f32-max component: inf/NaN scores, here hiding a distance-0
+    neighbour) or underflows (~3e-23 vectors: subnormal squares lose
+    their relative precision); the guard must then redo the row in f64,
+    so the top-k is the exact (dist, tid) order."""
+    import numpy as np
+
+    from knn_with_mapreduce_cuda_spark.plans.gemm_knn import knn_topk_gemm
+
+    rng = np.random.default_rng(30)
+    if case == "overflow":
+        t = np.zeros((40, 4))
+        t[:, 3] = np.arange(40)
+        t[0] = [3.0e38, 0.0, 0.0, 0.0]
+        q = t[:1].copy()
+    else:
+        t = rng.standard_normal((200, 64)) * 3e-23
+        q = rng.standard_normal((1, 64)) * 3e-23
+    t_df = spark.createDataFrame(
+        [(i, t[i].tolist()) for i in range(len(t))], "tid long, temb array<double>"
+    ).coalesce(1)
+    q_df = spark.createDataFrame([(1000, q[0].tolist())], "qid long, qemb array<double>")
+    got = sorted(knn_topk_gemm(q_df, t_df, 10).collect(), key=lambda r: r.rnk)
+
+    d2 = np.zeros(len(t))
+    for j in range(t.shape[1]):  # left fold, the expression path's order
+        d2 += (q[0, j] - t[:, j]) * (q[0, j] - t[:, j])
+    want = [(int(i), float(np.sqrt(d2[i]))) for i in np.lexsort((np.arange(len(t)), d2))[:10]]
+    assert [(r.tid, r.dist) for r in got] == want
+
+
 @pytest.mark.parametrize("precision", ["float32", "float64"])
 def test_gemm_cosine_tie_guard(spark, precision):
     """Similarity-descending twin: mass cosine ties at the k-th rank
@@ -846,13 +879,19 @@ def test_crossval_folds_half_pair_space_then_mirrors(spark):
     by an explode above the BNLJ — so the plan must show the qid < tid
     predicate in the join condition and a Generate (explode) above it,
     with the distance fold evaluated once, below the Generate."""
+    import re
+
     from knn_with_mapreduce_cuda_spark.operators.knn import _q_crossval
 
     plan = _plan(_q_crossval(spark, SF_SMOKE), "simple")
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "(qid" in plan and "< tid" in plan.replace("#", " ").replace("L", ""), plan
-    gen = plan.index("Generate")
-    bnlj = plan.index("BroadcastNestedLoopJoin")
-    assert gen < bnlj, plan  # explode ABOVE the join in tree print order
+    # anchored on adjacent tree lines, not first occurrences: the explode's
+    # child is the fold's Project, whose child is the qid < tid BNLJ
+    assert re.search(
+        r"^(?P<p> *)\+- Generate explode\(.*\n"
+        r"(?P=p)   \+- Project \[.*zip_with.* AS dist#\d+\]\n"
+        r"(?P=p)      \+- BroadcastNestedLoopJoin .*\(qid#\d+L < tid#\d+L\)",
+        plan,
+        re.M,
+    ), plan
     # exactly one zip_with distance fold in the whole plan
     assert plan.count("zip_with") == 1, plan

@@ -234,3 +234,29 @@ def test_code_segments_lexing_is_lossless(sql):
     segs = _code_segments(sql)
     assert "".join(t for _, t in segs) == sql
     assert all(t for _, t in segs)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(data=st.data())
+def test_gemm_fold_bit_identical_to_sq_euclidean(spark, data):
+    """The GEMM kernel's f64 rerank/fallback fold (``sq_dist_fold``) equals
+    the Catalyst ``sq_euclidean`` expression bit for bit — dims 1–128,
+    magnitudes up to 1e150, and every row paired with itself (a
+    duplicate) and with its 1-ulp neighbour (a near tie)."""
+    from knn_with_mapreduce_cuda_spark.plans.gemm_knn import sq_dist_fold
+
+    dim = data.draw(st.integers(1, 128), label="dim")
+    n = data.draw(st.integers(1, 4), label="n")
+    mag = st.floats(-1e150, 1e150, allow_nan=False, allow_infinity=False)
+    rows = st.lists(st.lists(mag, min_size=dim, max_size=dim), min_size=n, max_size=n)
+    a = np.array(data.draw(rows, label="a"))
+    b = np.array(data.draw(rows, label="b"))
+    q = np.vstack([a, a, a])
+    t = np.vstack([b, a, np.nextafter(a, np.inf)])
+    df = spark.createDataFrame(
+        [(i, q[i].tolist(), t[i].tolist()) for i in range(len(q))],
+        "i int, a array<double>, b array<double>",
+    )
+    got = df.select("i", METRICS["sqeuclidean"]("a", "b").alias("d")).orderBy("i").collect()
+    want = sq_dist_fold(q.T, t.T)
+    assert [r.d.hex() for r in got] == [float(x).hex() for x in want]
