@@ -375,14 +375,18 @@ def _jvm_counters(spark) -> dict:
             n += max(b.getCollectionCount(), 0)
             t += max(b.getCollectionTime(), 0)
         cl = mf.getClassLoadingMXBean()
-        cc_used = cc_max = 0
+        cc_used = 0
+        cc_max: int | None = 0
         pools = mf.getMemoryPoolMXBeans()
         for i in range(pools.size()):
             p = pools.get(i)
             if "CodeHeap" in p.getName() or "Code Cache" in p.getName():
                 u = p.getUsage()
                 cc_used += u.getUsed()
-                cc_max += u.getMax()
+                # getMax() is -1 for a segment with no defined max: the
+                # total is then unknown (null), not smaller or negative
+                m = u.getMax()
+                cc_max = None if cc_max is None or m < 0 else cc_max + m
         return {
             "jit_ms": mf.getCompilationMXBean().getTotalCompilationTime(),
             "gc_n": n,
@@ -390,10 +394,23 @@ def _jvm_counters(spark) -> dict:
             "loaded": cl.getTotalLoadedClassCount(),
             "unloaded": cl.getUnloadedClassCount(),
             "cc_used_mb": round(cc_used / (1 << 20), 1),
-            "cc_max_mb": round(cc_max / (1 << 20), 1),
+            "cc_max_mb": None if cc_max is None else round(cc_max / (1 << 20), 1),
         }
     except Exception:
         return {}
+
+
+def _jvm_delta(j0: dict, j1: dict) -> dict | None:
+    """One sample's JVM diag entry from the ``_jvm_counters`` reads before
+    and after it: cumulative counters differenced, code-cache gauges as
+    read after. None (the sample's slot kept, marked unknown) when either
+    read failed — an empty baseline would record the absolute cumulative
+    counters as this sample's deltas."""
+    if not j0 or not j1:
+        return None
+    return {
+        k: j1[k] - j0[k] for k in ("jit_ms", "gc_ms", "gc_n", "loaded", "unloaded")
+    } | {"cc_used_mb": j1["cc_used_mb"], "cc_max_mb": j1["cc_max_mb"]}
 
 
 def _tree_cpu_seconds() -> float:
@@ -823,17 +840,7 @@ def main() -> None:
             rs.append(round(time.perf_counter() - t0, 3))
             cs.append(round(max(_tree_cpu_seconds() - c0, 0.0), 3))
             if diag is not None:
-                j1 = _jvm_counters(spark)
-                diag.append(
-                    {
-                        k: j1.get(k, 0) - j0.get(k, 0)
-                        for k in ("jit_ms", "gc_ms", "gc_n", "loaded", "unloaded")
-                    }
-                    | {
-                        "cc_used_mb": j1.get("cc_used_mb"),
-                        "cc_max_mb": j1.get("cc_max_mb"),
-                    }
-                )
+                diag.append(_jvm_delta(j0, _jvm_counters(spark)))
 
         for _ in range(base):
             _one()
@@ -941,14 +948,14 @@ def main() -> None:
     match_pre, _, _ = _wait_for_idle(deadline)
     match_runs: dict[str, list[float]] = {}
     match_cpu: dict[str, list[float]] = {}
-    match_jvm: dict[str, list[dict]] = {}
+    match_jvm: dict[str, list[dict | None]] = {}
     for sk in DUCK_MATCHING_SPARK.values():
         pre = round(os.getloadavg()[0], 1)
         if pre >= bar and time.time() < deadline:
             retried.append(f"match:{sk}")
             pre, _, _ = _wait_for_idle(deadline)
         restore = _row_confs(sk)
-        jdiag: list[dict] = []
+        jdiag: list[dict | None] = []
         try:
             rs, cs = run_block(BENCH_QUERIES[sk], base=6, gc_each=True, diag=jdiag)
             post = round(os.getloadavg()[0], 1)

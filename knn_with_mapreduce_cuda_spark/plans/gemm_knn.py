@@ -11,8 +11,12 @@ shared memory [P:Garcia08]; the Spark-native equivalent is a
   ``||q-t||² = ||q||² + ||t||² - 2·q@tᵀ`` [P:Li19-GDS], then recomputes
   their distances as the f64 left fold of ``sq_dist_fold`` — bit-identical
   to the Catalyst expression path, so ranks and tie-breaks cannot move.
-- Per-partition top-k (``argpartition``) is the MapReduce Combiner: only
-  ``n_queries × k`` candidate rows per partition cross the shuffle.
+- Per-partition top-k is the MapReduce Combiner: only ``n_queries × k``
+  candidate rows per partition cross the shuffle. It is selected by
+  ``_smallest_cols`` in two exact stages — the minima of strided column
+  groups first, then only the columns of the kk best groups — over
+  query tiles sized by a fixed score budget (``TILE_SCORES``), so the
+  kernel's scratch does not grow with the query block.
 - A final window ``row_number() <= k`` merges partition-local candidates.
 
 It serves both graded kNN memos (operators.knn, one all-points pass),
@@ -42,12 +46,20 @@ except Exception:  # no cupy wheel / no visible device
 #: (task scheduling + Python worker spin-up vs a sub-ms BLAS call).
 BLOCK_ROWS = 65_536
 
-#: query rows per kernel tile. The d2 tile (Q_TILE × arrow-batch-rows)
-#: is the kernel's working set; at 8192×10000 f32 it is ~330 MB and 32
-#: concurrent workers thrash shared cache/bandwidth (measured 7.8 s per
-#: batch solo, 36 s under 32-way). Tiling to 2048 keeps the working set
-#: ~80 MB: 1.3 s solo, 9 s under 32-way — 3.7× aggregate throughput.
-Q_TILE = 2_048
+#: scores per kernel tile (8 MiB of f32): a tile holds
+#: ``max(1, TILE_SCORES // batch_rows)`` query rows, so the score matrix
+#: and the selection's index arrays stay the same size whatever the query
+#: block and Arrow batch sizes are. A fixed 2,048-row tile over a
+#: 10,000-row batch held 82 MB of scores plus a 164 MB int64 argpartition
+#: result: a 2,500-query × 10,000-row × 64-dim block peaked at 267 MiB
+#: (tracemalloc) and took 0.78 s on one Xeon thread, 0.44 s of it in the
+#: full-width argpartition. With this budget and ``_smallest_cols`` the
+#: same block peaks at 29 MiB and takes 0.23 s.
+TILE_SCORES = 1 << 21
+
+#: columns per selection group in ``_smallest_cols``: each row's
+#: n // GROUP_COLS group minima are ranked before any column is.
+GROUP_COLS = 16
 
 
 def gemm_backend() -> str:
@@ -127,6 +139,174 @@ def _safe_norm(mat):
     return n
 
 
+def _smallest_cols(scores, kk):
+    """Columns of the kk smallest entries of each row of ``scores`` (NaN
+    last), the kk-th smallest at position kk-1 — the contract of
+    ``np.argpartition(scores, kk - 1, axis=1)[:, :kk]``, which the
+    boundary-tie guards read. Two exact stages instead of one full-width
+    partition: column j belongs to strided group j mod G (G = n //
+    GROUP_COLS); the kk groups with the smallest NaN-ignoring minima are
+    chosen, and only their kk·GROUP_COLS columns plus the n - G·GROUP_COLS
+    tail columns are partitioned. Exact: with τ the largest chosen group
+    minimum, every entry below τ lies in a chosen group, and each chosen
+    group holds one entry ≤ τ, so the kk smallest values are the same
+    multiset (ties may pick other columns, as argpartition's already may).
+    ``fmin``, not ``min``: a NaN must not hide its group's finite entries."""
+    rows, n = scores.shape
+    groups = n // GROUP_COLS
+    if groups < 4 * kk:
+        return np.argpartition(scores, kk - 1, axis=1)[:, :kk]
+    head = groups * GROUP_COLS
+    gmin = np.fmin.reduce(scores[:, :head].reshape(rows, GROUP_COLS, groups), axis=1)
+    best = np.argpartition(gmin, kk - 1, axis=1)[:, :kk]
+    cols = (best[:, None, :] + groups * np.arange(GROUP_COLS)[:, None]).reshape(rows, -1)
+    if head < n:
+        tail = np.broadcast_to(np.arange(head, n), (rows, n - head))
+        cols = np.concatenate([cols, tail], axis=1)
+    part = np.argpartition(np.take_along_axis(scores, cols, axis=1), kk - 1, axis=1)
+    return np.take_along_axis(cols, part[:, :kk], axis=1)
+
+
+def _self_cells(tids, qids, qrow):
+    """(query row, train column) of every self pair in a batch — O(n_t)
+    sparse cells instead of an (n_q, n_t) boolean compare."""
+    cols = np.nonzero(np.isin(tids, qids))[0]
+    rows = np.array([qrow[int(t)] for t in tids[cols]], dtype=np.int64)
+    return rows, cols
+
+
+def _mask_self(scores, cells, s, e, fill):
+    """Set the self-pair cells of query rows s..e-1 in their score tile."""
+    rows, cols = cells
+    m = (rows >= s) & (rows < e)
+    scores[rows[m] - s, cols[m]] = fill
+
+
+def _knn_block(batches, qids, qmat, k, exclude_self, use_f32, use_cupy):
+    """The per-partition body of ``knn_candidates_gemm``: yields the
+    (qid, tid, dist) candidates of queries ``qids``/``qmat`` against each
+    Arrow batch of (tid, temb[, __gemm_tnorm]) train rows. Needs no
+    Spark, so its working set can be measured on plain Arrow batches."""
+    import pyarrow as pa
+
+    gmat = qmat.astype(np.float32) if use_f32 else qmat
+    qnorm = (gmat * gmat).sum(axis=1)
+    q_dims = np.ascontiguousarray(qmat.T)
+    # depends only on the broadcast qids — build once, not per
+    # Arrow batch (review r08: a 100k-query block over 10k-row
+    # batches rebuilt this dict 100x per partition)
+    qrow = {int(q): i for i, q in enumerate(qids)} if exclude_self else None
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        tids = batch.column("tid").to_numpy()
+        # zero-copy: flatten the fixed-width list column and reshape —
+        # no per-row Python objects (the np.stack path is ~10× slower)
+        tmat = (
+            batch.column("temb")
+            .flatten()
+            .to_numpy(zero_copy_only=False)
+            .reshape(len(tids), -1)
+        )
+        tsel = tmat.astype(np.float32) if use_f32 else tmat
+        if not use_cupy:
+            # one pre-transposed copy per batch, shared by all tiles
+            # (this OpenBLAS runs ~3× faster on the C-contiguous
+            # transposed operand than on the .T view)
+            tsel_t = np.ascontiguousarray(tsel.T)
+        t_dims = np.ascontiguousarray(tmat.T) if use_f32 else None  # for the fold
+        if not use_f32 and "__gemm_tnorm" in batch.schema.names:
+            # precomputed once in the cached train relation
+            # (knn_topk_gemm_chunked) — not per block. The dunder
+            # name is collision-proof (review r08: a caller's
+            # unrelated column literally named tnorm used to be
+            # trusted as ‖t‖² and produced garbage distances).
+            tnorm = batch.column("__gemm_tnorm").to_numpy()
+        else:
+            tnorm = (tsel * tsel).sum(axis=1)
+        if exclude_self:
+            cells = _self_cells(tids, qids, qrow)
+        kk = min(k + (OVERFETCH if use_f32 else 0), len(tids))
+        # Tile over queries: the (tile, n_t) score tile is the working
+        # set, held at TILE_SCORES whatever the block and batch sizes.
+        tile = max(1, TILE_SCORES // len(tids))
+        for s in range(0, len(qids), tile):
+            e = min(s + tile, len(qids))
+            if use_cupy:
+                d2 = _pair_scores(gmat[s:e], tsel, use_cupy)
+            else:
+                d2 = gmat[s:e] @ tsel_t
+            # assembled in-place on the GEMM output: no temporaries
+            d2 *= -2.0
+            d2 += qnorm[s:e, None]
+            d2 += tnorm[None, :]
+            if exclude_self:
+                _mask_self(d2, cells, s, e, np.inf)
+            if use_f32:
+                idx = _smallest_cols(d2, kk)
+                # exact f64 rerank of the selected candidates only:
+                # O(tile·kk·dim) vs the O(tile·n_t·dim) GEMM
+                d2k = sq_dist_fold(q_dims[:, s:e, None], (c[idx] for c in t_dims))
+                if exclude_self:
+                    d2k[qids[s:e, None] == tids[idx]] = np.inf
+                if kk < len(tids):
+                    # Boundary-tie guard (ADVICE r02): excluded points
+                    # have f32 dist² ≥ the kk-th f32 value. Unless a
+                    # row's k-th exact dist² is below it by more than
+                    # the f32 tolerance (never true for a NaN bound
+                    # or an overflowed norm), an excluded point could
+                    # be a neighbor or smaller-tid tie: redo the row
+                    # with an exact fold scan + tid-stable selection.
+                    rows = np.arange(idx.shape[0])
+                    bound32 = d2[rows, idx[:, kk - 1]].astype(np.float64)
+                    kth64 = np.partition(d2k, min(k, kk) - 1, axis=1)[
+                        :, min(k, kk) - 1
+                    ]
+                    tol = _f32_tie_tol(
+                        tmat.shape[1], float(qnorm[s:e].max()) + float(tnorm.max())
+                    )
+                    for r in np.nonzero(~(kth64 < bound32 - tol))[0]:
+                        dd = sq_dist_fold(q_dims[:, s + r], t_dims)
+                        if exclude_self:
+                            dd[tids == qids[s + r]] = np.inf
+                        exact_sel = np.lexsort((tids, dd))[:kk]
+                        idx[r] = exact_sel
+                        d2k[r] = dd[exact_sel]
+            else:
+                if kk < len(tids):
+                    # f64 boundary-tie guard: argpartition splits
+                    # EXACT ties at the k-th boundary arbitrarily,
+                    # which can drop the smaller-tid tie the contract
+                    # requires (same flaw ADVICE r02 flagged for the
+                    # f32 path, present whenever min(excluded) ==
+                    # max(selected)). Both pivots come from the ONE
+                    # argpartition this branch runs; affected rows
+                    # redo a tid-stable lexsort over the computed row.
+                    part = np.argpartition(d2, (kk - 1, kk), axis=1)
+                    idx = part[:, :kk]
+                    rows = np.arange(idx.shape[0])
+                    bound = d2[rows, part[:, kk - 1]]
+                    min_excl = d2[rows, part[:, kk]]
+                    for r in np.nonzero(min_excl <= bound)[0]:
+                        idx[r] = np.lexsort((tids, d2[r]))[:kk]
+                else:
+                    idx = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
+                d2k = np.take_along_axis(d2, idx, axis=1)
+                # sqrt-of-negative guard for the GEMM decomposition's
+                # catastrophic cancellation on near-zero distances
+                np.maximum(d2k, 0.0, out=d2k)
+            rows_q = np.repeat(qids[s:e], kk)
+            rows_t = tids[idx.ravel()]
+            rows_d = np.sqrt(d2k.ravel())
+            # self pairs go by id: an overflowed +inf dist still ranks
+            keep = ~np.isnan(rows_d)
+            if exclude_self:
+                keep &= rows_q != rows_t
+            yield pa.RecordBatch.from_pydict(
+                {"qid": rows_q[keep], "tid": rows_t[keep], "dist": rows_d[keep]}
+            )
+
+
 def knn_topk_gemm(
     queries_df: DataFrame, train_df: DataFrame, k: int = 10, *args, **kwargs
 ) -> DataFrame:
@@ -173,8 +353,6 @@ def knn_candidates_gemm(
     appended so a chunked caller can destroy it once the block's result
     is materialized (bounded residency, VERDICT r02 #3).
     """
-    import pyarrow as pa
-
     spark = queries_df.sparkSession
     use_cupy = (backend or gemm_backend()) == "cupy"
     use_f32 = precision == "float32" and not use_cupy
@@ -200,130 +378,9 @@ def knn_candidates_gemm(
 
     def block_knn(batches):
         b_qids, b_qmat = q_bc.value
-        gmat = b_qmat.astype(np.float32) if use_f32 else b_qmat
-        qnorm = (gmat * gmat).sum(axis=1)
-        q_dims = np.ascontiguousarray(b_qmat.T)
-        # depends only on the broadcast qids — build once, not per
-        # Arrow batch (review r08: a 100k-query block over 10k-row
-        # batches rebuilt this dict 100x per partition)
-        qrow = {int(q): i for i, q in enumerate(b_qids)} if exclude_self else None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tids = batch.column("tid").to_numpy()
-            # zero-copy: flatten the fixed-width list column and reshape —
-            # no per-row Python objects (the np.stack path is ~10× slower)
-            tmat = (
-                batch.column("temb")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(len(tids), -1)
-            )
-            tsel = tmat.astype(np.float32) if use_f32 else tmat
-            if not use_cupy:
-                # one pre-transposed copy per batch, shared by all tiles
-                # (this OpenBLAS runs ~3× faster on the C-contiguous
-                # transposed operand than on the .T view)
-                tsel_t = np.ascontiguousarray(tsel.T)
-            t_dims = np.ascontiguousarray(tmat.T) if use_f32 else None  # for the fold
-            if not use_f32 and "__gemm_tnorm" in batch.schema.names:
-                # precomputed once in the cached train relation
-                # (knn_topk_gemm_chunked) — not per block. The dunder
-                # name is collision-proof (review r08: a caller's
-                # unrelated column literally named tnorm used to be
-                # trusted as ‖t‖² and produced garbage distances).
-                tnorm = batch.column("__gemm_tnorm").to_numpy()
-            else:
-                tnorm = (tsel * tsel).sum(axis=1)
-            # O(n_t) sparse self-mask columns instead of an (n_q, n_t)
-            # boolean compare (which allocates and scans a full matrix)
-            if exclude_self:
-                self_pairs = [
-                    (qrow[int(tids[j])], j)
-                    for j in np.nonzero(np.isin(tids, b_qids))[0]
-                ]
-            kk = min(k + (OVERFETCH if use_f32 else 0), len(tids))
-            # Tile over queries: the (tile, n_t) distance tile is the
-            # working set — Q_TILE keeps it cache-resident so 32
-            # concurrent workers don't thrash shared bandwidth (3.7×
-            # aggregate throughput vs whole-block tiles; see Q_TILE).
-            for s in range(0, len(b_qids), Q_TILE):
-                e = min(s + Q_TILE, len(b_qids))
-                if use_cupy:
-                    d2 = _pair_scores(gmat[s:e], tsel, use_cupy)
-                else:
-                    d2 = gmat[s:e] @ tsel_t
-                # assembled in-place on the GEMM output: no temporaries
-                d2 *= -2.0
-                d2 += qnorm[s:e, None]
-                d2 += tnorm[None, :]
-                if exclude_self:
-                    for r, j in self_pairs:
-                        if s <= r < e:
-                            d2[r - s, j] = np.inf
-                if use_f32:
-                    idx = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-                    # exact f64 rerank of the selected candidates only:
-                    # O(tile·kk·dim) vs the O(tile·n_t·dim) GEMM
-                    d2k = sq_dist_fold(q_dims[:, s:e, None], (c[idx] for c in t_dims))
-                    if exclude_self:
-                        d2k[b_qids[s:e, None] == tids[idx]] = np.inf
-                    if kk < len(tids):
-                        # Boundary-tie guard (ADVICE r02): excluded points
-                        # have f32 dist² ≥ the kk-th f32 value. Unless a
-                        # row's k-th exact dist² is below it by more than
-                        # the f32 tolerance (never true for a NaN bound
-                        # or an overflowed norm), an excluded point could
-                        # be a neighbor or smaller-tid tie: redo the row
-                        # with an exact fold scan + tid-stable selection.
-                        rows = np.arange(idx.shape[0])
-                        bound32 = d2[rows, idx[:, kk - 1]].astype(np.float64)
-                        kth64 = np.partition(d2k, min(k, kk) - 1, axis=1)[
-                            :, min(k, kk) - 1
-                        ]
-                        tol = _f32_tie_tol(
-                            tmat.shape[1], float(qnorm[s:e].max()) + float(tnorm.max())
-                        )
-                        for r in np.nonzero(~(kth64 < bound32 - tol))[0]:
-                            dd = sq_dist_fold(q_dims[:, s + r], t_dims)
-                            if exclude_self:
-                                dd[tids == b_qids[s + r]] = np.inf
-                            exact_sel = np.lexsort((tids, dd))[:kk]
-                            idx[r] = exact_sel
-                            d2k[r] = dd[exact_sel]
-                else:
-                    if kk < len(tids):
-                        # f64 boundary-tie guard: argpartition splits
-                        # EXACT ties at the k-th boundary arbitrarily,
-                        # which can drop the smaller-tid tie the contract
-                        # requires (same flaw ADVICE r02 flagged for the
-                        # f32 path, present whenever min(excluded) ==
-                        # max(selected)). Both pivots come from the ONE
-                        # argpartition this branch runs; affected rows
-                        # redo a tid-stable lexsort over the computed row.
-                        part = np.argpartition(d2, (kk - 1, kk), axis=1)
-                        idx = part[:, :kk]
-                        rows = np.arange(idx.shape[0])
-                        bound = d2[rows, part[:, kk - 1]]
-                        min_excl = d2[rows, part[:, kk]]
-                        for r in np.nonzero(min_excl <= bound)[0]:
-                            idx[r] = np.lexsort((tids, d2[r]))[:kk]
-                    else:
-                        idx = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-                    d2k = np.take_along_axis(d2, idx, axis=1)
-                    # sqrt-of-negative guard for the GEMM decomposition's
-                    # catastrophic cancellation on near-zero distances
-                    np.maximum(d2k, 0.0, out=d2k)
-                rows_q = np.repeat(b_qids[s:e], kk)
-                rows_t = tids[idx.ravel()]
-                rows_d = np.sqrt(d2k.ravel())
-                # self pairs go by id: an overflowed +inf dist still ranks
-                keep = ~np.isnan(rows_d)
-                if exclude_self:
-                    keep &= rows_q != rows_t
-                yield pa.RecordBatch.from_pydict(
-                    {"qid": rows_q[keep], "tid": rows_t[keep], "dist": rows_d[keep]}
-                )
+        yield from _knn_block(
+            batches, b_qids, b_qmat, k, exclude_self, use_f32, use_cupy
+        )
 
     return train_df.mapInArrow(block_knn, "qid long, tid long, dist double")
 
@@ -398,6 +455,11 @@ def knn_topk_gemm_chunked(
       broadcast destroyed before the next block's broadcast is built —
       exactly one ``query_block_rows × dim`` broadcast is resident at
       any time (asserted in tests/test_plans.py).
+    - Inside a task the kernel's scratch is one ``TILE_SCORES`` score
+      tile plus its selection, whatever ``query_block_rows`` and the
+      Arrow batch rows are, so the query broadcast is the only part of
+      a worker's working set that grows with the block (pinned in
+      tests/test_plans.py).
     - The train side is projected once — plus a ``__gemm_tnorm`` column only
       when the selected kernel actually reads it (the f64/CuPy branch;
       ADVICE r02) — and **persisted**, so the train scan happens once
@@ -506,24 +568,20 @@ def cosine_topk_gemm(
             if not use_cupy:
                 tsel_t = np.ascontiguousarray(tsel.T)
             if exclude_self:
-                self_pairs = [
-                    (qrow[int(tids[j])], j)
-                    for j in np.nonzero(np.isin(tids, b_qids))[0]
-                ]
+                cells = _self_cells(tids, b_qids, qrow)
             kk = min(k + (OVERFETCH if use_f32 else 0), len(tids))
-            # query tiling — see knn_topk_gemm / Q_TILE
-            for s in range(0, len(b_qids), Q_TILE):
-                e = min(s + Q_TILE, len(b_qids))
+            # query tiling — see _knn_block / TILE_SCORES
+            tile = max(1, TILE_SCORES // len(tids))
+            for s in range(0, len(b_qids), tile):
+                e = min(s + tile, len(b_qids))
                 if use_cupy:
                     cos = _pair_scores(gmat[s:e], tsel, use_cupy)
                 else:
                     cos = gmat[s:e] @ tsel_t
                 if exclude_self:
-                    for r, j in self_pairs:
-                        if s <= r < e:
-                            cos[r - s, j] = -np.inf
+                    _mask_self(cos, cells, s, e, -np.inf)
                 if use_f32:
-                    idx = np.argpartition(-cos, kk - 1, axis=1)[:, :kk]
+                    idx = _smallest_cols(-cos, kk)
                     # exact f64 cosine for the candidates only (unit-norm
                     # f64 rows → plain dot), self-pairs re-masked
                     cosk = np.einsum("qd,qkd->qk", b_qmat[s:e], tmat[idx])

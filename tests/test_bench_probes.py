@@ -359,3 +359,56 @@ def test_chunked_bench_row_matches_single_block(spark):
     assert n_blocks >= bench.CHUNKED_BLOCKS, (n, block_rows, n_blocks)
     key = lambda rows: sorted((r.qid, r.tid, r.rnk) for r in rows)
     assert key(whole) == key(chunked)
+
+
+def _fake_jvm_spark(pool_maxes):
+    """A stand-in session whose JVM exposes code-cache pools with the given
+    getMax() values (1 MiB used each) and zeroed other counters."""
+    from types import SimpleNamespace as NS
+
+    def jlist(items):
+        return NS(size=lambda: len(items), get=lambda i: items[i])
+
+    pools = [
+        NS(
+            getName=lambda i=i: f"CodeHeap 'seg{i}'",
+            getUsage=lambda m=m: NS(getUsed=lambda: 1 << 20, getMax=lambda: m),
+        )
+        for i, m in enumerate(pool_maxes)
+    ]
+    mf = NS(
+        getGarbageCollectorMXBeans=lambda: jlist([]),
+        getClassLoadingMXBean=lambda: NS(
+            getTotalLoadedClassCount=lambda: 0, getUnloadedClassCount=lambda: 0
+        ),
+        getMemoryPoolMXBeans=lambda: jlist(pools),
+        getCompilationMXBean=lambda: NS(getTotalCompilationTime=lambda: 0),
+    )
+    jvm = NS(java=NS(lang=NS(management=NS(ManagementFactory=mf))))
+    return NS(sparkContext=NS(_jvm=jvm))
+
+
+def test_jvm_counters_code_cache_max_null_when_a_pool_is_undefined():
+    """ADVICE: MemoryUsage.getMax() is -1 for a pool with no defined max;
+    summing it skewed cc_max_mb (negative for small caches). Any -1 pool
+    makes the total unknown (null); defined pools still sum."""
+    got = bench._jvm_counters(_fake_jvm_spark([8 << 20, -1, 4 << 20]))
+    assert got["cc_max_mb"] is None
+    assert got["cc_used_mb"] == 3.0
+    assert bench._jvm_counters(_fake_jvm_spark([8 << 20, 4 << 20]))["cc_max_mb"] == 12.0
+
+
+def test_jvm_delta_marks_sample_when_a_read_failed():
+    """ADVICE: a failed pre-sample read ({}) used to default the baseline
+    to 0, recording absolute cumulative counters as the sample's deltas.
+    The sample's slot is kept but marked unknown (None)."""
+    j0 = {"jit_ms": 100, "gc_ms": 5, "gc_n": 2, "loaded": 900, "unloaded": 1,
+          "cc_used_mb": 10.0, "cc_max_mb": 240.0}
+    j1 = {"jit_ms": 130, "gc_ms": 9, "gc_n": 3, "loaded": 950, "unloaded": 1,
+          "cc_used_mb": 11.5, "cc_max_mb": None}
+    assert bench._jvm_delta({}, j1) is None
+    assert bench._jvm_delta(j0, {}) is None
+    assert bench._jvm_delta(j0, j1) == {
+        "jit_ms": 30, "gc_ms": 4, "gc_n": 1, "loaded": 50, "unloaded": 0,
+        "cc_used_mb": 11.5, "cc_max_mb": None,
+    }

@@ -283,6 +283,40 @@ def test_gemm_topk_matches_numpy_reference_on_tie_dense_data(spark, seed, precis
     assert got_k == sorted(want)
 
 
+def test_gemm_kernel_working_set_is_bounded():
+    """The per-partition kernel's traced allocations stay below 64 MiB
+    for a 2,500-query block against one 10,000-row × 64-dim Arrow batch:
+    score tiles of TILE_SCORES and the two-stage selection, not a
+    (block × batch) score matrix and its int64 argpartition (a fixed
+    2,048-row tile peaked at 267 MiB here). No Spark: the body runs on
+    a plain Arrow batch."""
+    import tracemalloc
+
+    import numpy as np
+    import pyarrow as pa
+
+    from knn_with_mapreduce_cuda_spark.plans.gemm_knn import _knn_block
+
+    n_t, n_q, dim = 10_000, 2_500, 64
+    tmat = np.random.default_rng(5).standard_normal((n_t, dim))
+    tids = np.arange(n_t, dtype=np.int64)
+    offsets = pa.array(np.arange(0, n_t * dim + 1, dim, dtype=np.int32))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(tids), pa.ListArray.from_arrays(offsets, pa.array(tmat.ravel()))],
+        ["tid", "temb"],
+    )
+    qids, qmat = tids[:n_q], tmat[:n_q].copy()
+    tracemalloc.start()
+    try:
+        out = list(_knn_block([batch], qids, qmat, 10, True, True, False))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    got_q = np.concatenate([b.column("qid").to_numpy() for b in out])
+    assert set(got_q.tolist()) == set(qids.tolist())
+    assert peak < 64 << 20, f"kernel peak {peak / 2**20:.1f} MiB"
+
+
 def test_gemm_no_eager_jobs_on_construction(spark):
     """Building the unchunked GEMM plan must not launch Spark jobs (the
     r01 `_ensure_parallel` probe ran .rdd + count() per call)."""

@@ -260,3 +260,46 @@ def test_gemm_fold_bit_identical_to_sq_euclidean(spark, data):
     got = df.select("i", METRICS["sqeuclidean"]("a", "b").alias("d")).orderBy("i").collect()
     want = sq_dist_fold(q.T, t.T)
     assert [r.d.hex() for r in got] == [float(x).hex() for x in want]
+
+
+@settings(max_examples=300, deadline=None, suppress_health_check=list(HealthCheck))
+@given(data=st.data())
+def test_smallest_cols_selects_partition_multiset(data):
+    """The GEMM kernel's two-stage top-kk selection (``_smallest_cols``)
+    keeps ``np.partition``'s kk smallest values of every f32 score row as
+    a multiset (NaN last), holds the kk-th smallest at position kk-1 and
+    leaves out nothing below it — over NaN entries and all-NaN groups,
+    ±inf, integer-valued mass ties, widths that are not a multiple of
+    the group size, and widths below the two-stage threshold."""
+    from knn_with_mapreduce_cuda_spark.plans.gemm_knn import GROUP_COLS, _smallest_cols
+
+    kk = data.draw(st.integers(1, 6), label="kk")
+    two_stage = 4 * kk * GROUP_COLS
+    n = data.draw(
+        st.one_of(st.integers(kk, two_stage - 1), st.integers(two_stage, 2 * two_stage)),
+        label="n",
+    )
+    rows = data.draw(st.integers(1, 4), label="rows")
+    spread = data.draw(st.sampled_from([1, 3, 1_000_000]), label="spread")
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1), label="seed"))
+    scores = rng.integers(-spread, spread + 1, size=(rows, n)).astype(np.float32)
+    for value in (np.nan, np.inf, -np.inf):
+        frac = data.draw(st.sampled_from([0.0, 0.01, 0.3]), label=f"{value} frac")
+        scores[rng.random(scores.shape) < frac] = value
+    groups = n // GROUP_COLS
+    for g in data.draw(st.lists(st.integers(0, max(groups - 1, 0)), max_size=8), label="nan groups"):
+        scores[:, g : groups * GROUP_COLS : max(groups, 1)] = np.nan
+
+    cols = _smallest_cols(scores, kk)
+    assert cols.shape == (rows, kk)
+    for row, sel in zip(scores, cols):
+        assert len(set(sel.tolist())) == kk
+        ordered = np.sort(row)  # NaN last, as np.partition orders them
+        np.testing.assert_array_equal(np.sort(row[sel]), np.sort(np.partition(row, kk - 1)[:kk]))
+        kth = ordered[kk - 1]
+        np.testing.assert_array_equal(row[sel[kk - 1]], kth)
+        rest = np.delete(row, sel)
+        if np.isnan(kth):
+            assert np.isnan(rest).all()
+        else:
+            assert (np.isnan(rest) | (rest >= kth)).all()
